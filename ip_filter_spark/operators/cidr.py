@@ -1,29 +1,35 @@
-"""IPv4/IPv6 CIDR adapter for the LPM engine — the reference's actual
-domain (/root/reference/prototype/utils.py:53-56 encodes routes as
-``(prefix_len << 32|128) + prefix``; ipfilter.py:26-27 ``NUMBITS =
-{'v4': 32, 'v6': 128}``).
+"""IPv4/IPv6 CIDR adapter for the LPM engine — the reference's own
+domain (its prototype keys a route as ``(prefix_len << 32|128) +
+prefix``, prototype/utils.py:53-56).
 
-The PathLPM kernel is domain-agnostic (it hashes (prefix, depth) pairs),
-so the adapter is a pure column-expression mapping: an address becomes a
-per-bit '/'-joined path (``"1/0/0/..."``, 32 or 128 components) and a
-CIDR route becomes the first ``prefix_len`` components at depth
-``prefix_len``. Longest-prefix-match over bit-paths IS longest-prefix-
-match over CIDRs. Everything stays JVM-side (split/transform/floor —
-whole-stage codegen); no Python touches a row.
+An address is held as int64 words, most significant first: one for v4,
+two for v6 (hi/lo halves, parsed once per row from 32-char hex with
+``conv(…, 16, -10)``). ``MaskDomain`` truncates to depth d by masking
+the words to the top d bits — one truncation for both families — and a
+route key hashes as Spark's ``xxhash64(int d, masked words…)``: JVM-side
+for routes at build time, while a lookup ships only the raw words and
+the numpy kernel masks and hashes them per route depth (see "Key
+encoding" in operators/lpm.py). Key forms: a masked long (v4), masked
+32-char lowercase hex (v6, rendered only where a prefix is returned).
+The '/'-joined bit paths (``ip4_to_bitpath``) are a cross-domain oracle.
 
-Golden behavior pinned from the reference's test suite
-(/root/reference/prototype/tests.py_bak:309-349): 1.0.0.0 → /24 when
-1.0.0.0/24 is in the table; 0.255.255.255 → 0 (default route, miss);
-the 5-address traffic batch finds exactly 3.
+Goldens from the reference's tests (prototype/tests.py_bak:309-349):
+1.0.0.0 → /24 when 1.0.0.0/24 is in the table; 0.255.255.255 → 0
+(default route, miss); the 5-address traffic batch finds exactly 3.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ip_filter_spark.operators.lpm import KeyDomain, PathLPM
+from ip_filter_spark.sketches.hashing import spark_xxhash64
+
 V4_BITS = 32
-V6_BITS = 128
 
 
 def ip4_from_dotted(ip_str_col):
@@ -77,10 +83,57 @@ def ip6_to_bitpath(hex_col):
     return _bits_to_path(ip6_bits(hex_col))
 
 
-def ip4_prefix_path(ip_col, plen_col):
-    """(masked uint32, prefix_len) → bit path of the first plen bits —
-    the PathLPM 'prefix' column for a CIDR route."""
-    return _bits_to_path(ip4_bits(ip_col), plen_col)
+def _masked_hashes(depths: np.ndarray, masks: np.ndarray, K: np.ndarray) -> np.ndarray:
+    """(n, c) raw words → (n, D) key hashes: the kernel twin of
+    ``MaskDomain.key_hash``."""
+    return spark_xxhash64(depths[None, :], [K[:, i : i + 1] & masks[i] for i in range(K.shape[1])])
+
+
+class MaskDomain(KeyDomain):
+    """Fixed-width address domain (module docstring). ``words(key_col)``
+    splits a key into int64 word columns of ``widths`` bits, most
+    significant first; ``render(words)`` turns masked words back into
+    the key form. Route tables give prefixes in key form (already
+    masked: ``cidr4_route_table`` / ``ip6_route_table``), so
+    ``route_hash`` hashes their words as they are."""
+
+    def __init__(self, widths, words, render):
+        self.widths, self.words, self.render = widths, words, render
+        self.offsets = [sum(widths[:i]) for i in range(len(widths))]
+
+    def masks(self, depths) -> np.ndarray:
+        """(words, D) uint64: word i keeps ``-1 << (width - keep)``
+        (0 if keep = 0), keep = its share of the top ``depth`` bits."""
+        keeps = [[min(max(d - off, 0), w) for d in depths] for w, off in zip(self.widths, self.offsets)]
+        rows = [[(1 << 64) - (1 << (w - k)) if k else 0 for k in ks] for w, ks in zip(self.widths, keeps)]
+        return np.array(rows, dtype=np.uint64)
+
+    def mask(self, words, depth):
+        """JVM twin of ``masks``; a literal depth folds to constants."""
+        if not hasattr(depth, "cast"):
+            consts = self.masks([depth])[:, 0].view(np.int64)
+            return [c.bitwiseAND(F.lit(int(m))) for c, m in zip(words, consts)]
+        out = []
+        for c, w, off in zip(words, self.widths, self.offsets):
+            k = F.least(F.greatest(depth - off, F.lit(0)), F.lit(w))
+            m = F.call_function("shiftleft", F.lit(-1).cast("long"), (w - k).cast("int"))
+            out.append(c.bitwiseAND(F.when(k > 0, m).otherwise(0)))
+        return out
+
+    def __call__(self, key_col, depth):
+        return self.render(self.mask(self.words(key_col), depth))
+
+    def key_hash(self, key_col, depth):
+        d = depth if hasattr(depth, "cast") else F.lit(depth)
+        return F.xxhash64(d.cast("int"), *self.mask(self.words(key_col), depth))
+
+    def route_hash(self, prefix_col, depth):
+        d = depth if hasattr(depth, "cast") else F.lit(depth)
+        return F.xxhash64(d.cast("int"), *self.words(prefix_col))
+
+    def probe(self, key_col, depths):
+        kernel = partial(_masked_hashes, np.asarray(depths, dtype=np.int64), self.masks(depths))
+        return self.words(key_col), kernel
 
 
 def parse_cidr4(cidr_col):
@@ -93,28 +146,27 @@ def parse_cidr4(cidr_col):
     )
 
 
-def ip4_trunc(key_col, depth):
-    """The IPv4 LPM domain's truncation: decimal-string key → masked
-    decimal-string key at ``depth`` (int or Column). Plugs into
-    ``PathLPM.build(trunc=...)`` / ``lookup(trunc=...)`` so v4 keys are
-    three integer ops per depth instead of a 32-component bit-string
-    build + split + rejoin (~10x less JVM work per probed row).
-    pow(2, 32-d) is exact in double through 2^31, so the mask arithmetic
-    is exact for all v4 depths."""
-    d = depth if hasattr(depth, "cast") else F.lit(depth)
-    ip = key_col.cast("long")
-    p2 = F.pow(F.lit(2.0), (F.lit(V4_BITS) - d).cast("double")).cast("long")
-    return (ip - (ip % p2)).cast("long").cast("string")
+def _hex_words(hex_col):
+    """32-char hex (either case) → [hi, lo] signed int64 words."""
+    return [F.conv(hex_col.substr(i, 16), 16, -10).cast("long") for i in (1, 17)]
+
+
+def _words_hex(words):
+    return F.concat(*[F.lower(F.lpad(F.hex(w), 16, "0")) for w in words])
+
+
+# v4: uint32 address (long or decimal string) → masked long
+ip4_trunc = MaskDomain((V4_BITS,), lambda c: [c.cast("long")], lambda ws: ws[0])
+# v6: 32-char hex → masked 32-char lowercase hex
+ip6_trunc = MaskDomain((64, 64), _hex_words, _words_hex)
 
 
 def cidr4_route_table(cidrs: DataFrame, cidr_col: str = "cidr") -> DataFrame:
-    """CIDR-string table → PathLPM (prefix, depth) table in the numeric
-    key domain: prefix = masked address as a decimal string."""
+    """CIDR-string table → PathLPM (prefix, depth) table in the v4 key
+    domain: prefix = masked address as a long."""
     ip = ip4_from_dotted(F.split(F.col(cidr_col), "/")[0])
     plen = F.split(F.col(cidr_col), "/")[1].cast("int")
-    return cidrs.select(
-        ip4_trunc(ip.cast("string"), plen).alias("prefix"), plen.alias("depth")
-    ).distinct()
+    return cidrs.select(ip4_trunc(ip, plen).alias("prefix"), plen.alias("depth")).distinct()
 
 
 def cidr4_bitpath_table(cidrs: DataFrame, cidr_col: str = "cidr") -> DataFrame:
@@ -125,10 +177,8 @@ def cidr4_bitpath_table(cidrs: DataFrame, cidr_col: str = "cidr") -> DataFrame:
 
 
 def build_ip4_lpm(cidrs: DataFrame, cidr_col: str = "cidr", **build_kw):
-    """Build a guided LPM engine over an IPv4 CIDR route table (numeric
-    key domain — pair lookups with ``lookup_ip4``)."""
-    from ip_filter_spark.operators.lpm import PathLPM
-
+    """Build a guided LPM engine over an IPv4 CIDR route table (v4 key
+    domain — pair lookups with ``lookup_ip4``)."""
     return PathLPM.build(cidr4_route_table(cidrs, cidr_col), trunc=ip4_trunc, **build_kw)
 
 
@@ -138,16 +188,12 @@ def lookup_ip4(
     """LPM every uint32 address in ``traffic``: adds lpm_depth (matched
     prefix length, 0 = default route) and lpm_prefix_ip (the matched
     prefix's masked address as a long, null on miss). The engine must
-    have been built in the numeric key domain (``build_ip4_lpm`` or
-    ``PathLPM.build(trunc=ip4_trunc)``). ``exact_repair``: the numeric
-    route table (``cidr4_route_table``) to close the FIB's 64-bit
-    collision window exactly (see operators/lpm.py module docstring)."""
-    out = engine.lookup(
-        traffic, path_col=ip_col, mode=mode, trunc=ip4_trunc, exact_repair=exact_repair
-    )
-    return out.withColumn(
-        "lpm_prefix_ip", F.when(F.col("lpm_depth") > 0, F.col("lpm_prefix").cast("long"))
-    ).drop("lpm_prefix")
+    have been built in the v4 key domain (``build_ip4_lpm`` or
+    ``PathLPM.build(trunc=ip4_trunc)``). ``exact_repair``: the v4 route
+    table (``cidr4_route_table``) to close the FIB's 64-bit collision
+    window exactly (see operators/lpm.py module docstring)."""
+    out = engine.lookup(traffic, path_col=ip_col, mode=mode, trunc=ip4_trunc, exact_repair=exact_repair)
+    return out.withColumnRenamed("lpm_prefix", "lpm_prefix_ip")
 
 
 def format_ip4(ip_col):
@@ -162,52 +208,26 @@ def format_ip4(ip_col):
     return F.concat_ws(".", *[o.cast("string") for o in octets])
 
 
-def ip6_trunc(key_col, depth):
-    """The IPv6 LPM domain's truncation: canonical 32-char lowercase hex
-    key → masked, zero-padded 32-char hex key at ``depth`` (int or
-    Column). Whole nibbles are kept with substr; the one partial nibble
-    is masked via conv(hex→dec), integer mask, conv(dec→hex) — no
-    128-element bit arrays anywhere (the bit-path form costs ~128
-    transform ops per row; this is ~6 string/int ops)."""
-    d = depth if hasattr(depth, "cast") else F.lit(depth)
-    fullnib = F.floor(d / 4).cast("int")
-    rem = (d % 4).cast("int")
-    head = key_col.substr(F.lit(1), fullnib)
-    nib = F.conv(key_col.substr(fullnib + F.lit(1), F.lit(1)), 16, 10).cast("long")
-    keep = F.pow(F.lit(2.0), (F.lit(4) - rem).cast("double")).cast("long")
-    # r6: dec->hex via native hex() (identical output for 0..15; the
-    # hex->dec parse above stays conv, which accepts either case)
-    nibhex = F.lower(F.hex(nib - (nib % keep)))
-    return F.rpad(F.when(rem > 0, F.concat(head, nibhex)).otherwise(head), 32, "0")
-
-
 def ip6_route_table(routes: DataFrame, hex_col: str = "h", plen_col: str = "depth") -> DataFrame:
     """(32-char hex, prefix_len) table → PathLPM (prefix, depth) in the
-    masked-hex key domain."""
-    return routes.select(
-        ip6_trunc(F.col(hex_col), F.col(plen_col)).alias("prefix"),
-        F.col(plen_col).cast("int").alias("depth"),
-    ).distinct()
+    v6 key domain."""
+    plen = F.col(plen_col).cast("int")
+    return routes.select(ip6_trunc(F.col(hex_col), plen).alias("prefix"), plen.alias("depth")).distinct()
 
 
 def build_ip6_lpm(routes: DataFrame, hex_col: str = "h", plen_col: str = "depth", **build_kw):
-    """Guided LPM engine over IPv6 routes given as canonical 32-char
-    lowercase hex + prefix length (masked-hex key domain; pair with
-    ``lookup_ip6``)."""
-    from ip_filter_spark.operators.lpm import PathLPM
-
+    """Guided LPM engine over IPv6 routes given as 32-char hex + prefix
+    length (v6 key domain; pair with ``lookup_ip6``)."""
     return PathLPM.build(ip6_route_table(routes, hex_col, plen_col), trunc=ip6_trunc, **build_kw)
 
 
 def lookup_ip6(
     engine, traffic: DataFrame, hex_col: str = "h", mode: str = "guided", exact_repair=None
 ) -> DataFrame:
-    """LPM every v6 address (canonical 32-char lowercase hex) in
-    ``traffic``: adds lpm_depth and lpm_prefix_hex (masked 32-char hex of
-    the matched prefix, null on miss). ``exact_repair``: the hex-domain
-    route table (``ip6_route_table``) closes the FIB's 64-bit collision
-    window exactly, same as the v4 and path domains."""
-    out = engine.lookup(
-        traffic, path_col=hex_col, mode=mode, trunc=ip6_trunc, exact_repair=exact_repair
-    )
+    """LPM every v6 address (32-char hex, either case) in ``traffic``:
+    adds lpm_depth and lpm_prefix_hex (masked 32-char lowercase hex of
+    the matched prefix, null on miss). ``exact_repair``: the v6 route
+    table (``ip6_route_table``) closes the FIB's 64-bit collision window
+    exactly, same as the v4 and path domains."""
+    out = engine.lookup(traffic, path_col=hex_col, mode=mode, trunc=ip6_trunc, exact_repair=exact_repair)
     return out.withColumnRenamed("lpm_prefix", "lpm_prefix_hex")

@@ -39,20 +39,30 @@ h < hit additionally verifies the (h, hit] depth interval, so guided ≡
 linear ≡ exact always — making the operator oracle-checkable — while
 keeping the probe-count savings (the interval is almost always empty).
 
-Key encoding: each (prefix, depth) route key is hashed JVM-side to ONE
-64-bit value (``xxhash64(depth, prefix)``), which serves as both the
-Bloom hash base and the FIB confirm key. The probe therefore ships 8
-bytes per (row, depth) over Arrow — half the previous 16-byte truncated
-sha256 digests, which themselves halved full sha256 — and the Python
-kernel starts from ready-made hashes (no per-batch FNV pass). The FIB is
-a sorted uint64 array; its confirm is exact up to 64-bit collisions
-between a probed non-route key and a stored route (expected wrong rows ≈
-n_routes·probes / 2^64 — under 3 per trillion probes at the enforced
-50M-route design bound (see build()'s assert); zero at any test scale). Every such wrong answer necessarily
-names a (prefix, depth) that is NOT in the route table, so
-``lookup(..., exact_repair=routes)`` restores full exactness with one
-broadcast anti-join against the route table plus an exact re-resolve of
-the (expected-empty) mismatch set.
+Key encoding: each (prefix, depth) route key hashes to ONE 64-bit value,
+Spark's ``xxhash64``, which serves as both the Bloom hash base and the
+FIB confirm key. A ``KeyDomain`` decides how that hash is formed and
+where the probe computes it:
+
+- the '/'-path domain (and any plain ``trunc`` callable) hashes
+  ``xxhash64(depth, trunc(key, depth))`` JVM-side and ships 8 bytes per
+  (row, depth) over Arrow — the Python kernel starts from ready-made
+  hashes;
+- the CIDR domains (``cidr.MaskDomain``) hash
+  ``xxhash64(depth, masked int64 words)`` and ship only the raw address
+  words, 8 or 16 bytes per row whatever the number of route depths; the
+  kernel masks them per depth and runs a bit-exact numpy copy of the
+  same hash (``hashing.spark_xxhash64``), so build (JVM) and probe
+  (numpy) keys agree.
+
+The FIB is a sorted uint64 array; its confirm is exact up to 64-bit
+collisions between a probed non-route key and a stored route (expected
+wrong rows ≈ n_routes·probes / 2^64 — under 3 per trillion probes at the
+enforced 50M-route design bound (see build()'s assert); zero at any test
+scale). Every such wrong answer necessarily names a (prefix, depth) that
+is NOT in the route table, so ``lookup(..., exact_repair=routes)``
+restores full exactness with one broadcast anti-join against the route
+table plus an exact re-resolve of the (expected-empty) mismatch set.
 """
 
 from __future__ import annotations
@@ -76,29 +86,33 @@ from pyspark.sql.types import (
 from ip_filter_spark.plans.obst import GuideTree
 from ip_filter_spark.sketches.bloom import BloomFilter
 SEP = "/"
-_MAGIC = b"IFLPM2"  # v2: uint64 xxhash64 keys (v1 shipped 16-byte sha256 digests)
+# v3: CIDR keys hash masked int64 words (v2 hashed their decimal/hex
+# strings; v1 shipped 16-byte sha256 digests). Same length as v2.
+_MAGIC = b"IFLPM3"
 _KERNEL_CHUNK = 8192
 
 
 def _h64_expr(key_col, depth_col):
     """64-bit key hash of a (prefix, depth) pair, JVM-side — the analog
     of the reference's encoded key ``(len << b) + prefix``
-    (/root/reference/prototype/utils.py:53-56). ``xxhash64`` is a native
-    codegen expression (no sha2 rounds, no unhex/substring), and ONE
-    LongType column per (row, depth) is the minimum the kernel needs:
-    the same value is the Kirsch–Mitzenmacher base for every Bloom probe
-    AND the FIB confirm key (see module docstring for the collision
-    bound and the ``exact_repair`` escape hatch)."""
+    (prototype/utils.py:53-56). ``xxhash64`` is a native codegen
+    expression (no sha2 rounds, no unhex/substring); the one value is
+    the Kirsch–Mitzenmacher base for every Bloom probe AND the FIB
+    confirm key (see module docstring for the collision bound and the
+    ``exact_repair`` escape hatch)."""
     d = depth_col if hasattr(depth_col, "cast") else F.lit(depth_col)
     return F.xxhash64(d.cast("int"), key_col)
 
 
 def _arrow_int64(arr) -> np.ndarray:
-    """Arrow int64 array (no nulls) → uint64 numpy view, zero-copy."""
+    """Arrow int64 array → uint64 numpy view, zero-copy when it has no
+    nulls (a null reads as 0; the caller masks those rows)."""
     import pyarrow as pa
 
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
+    if arr.null_count:
+        arr = arr.fill_null(0)
     return arr.to_numpy(zero_copy_only=False).view(np.uint64)
 
 
@@ -138,6 +152,45 @@ def _trunc(path_col, depth):
 
 def path_depth(path_col):
     return F.size(F.split(path_col, SEP))
+
+
+def _stacked(K: np.ndarray) -> np.ndarray:
+    return K
+
+
+class KeyDomain:
+    """A prefix domain: how a key truncates to a depth and how a (key,
+    depth) pair becomes the 64-bit hash the filter and the FIB use.
+
+    This base class is the string-key domain — '/'-paths by default, or
+    any ``trunc(key_col, depth)`` callable: the JVM hashes
+    ``xxhash64(depth, trunc(key, depth))`` and the probe ships those D
+    hash columns, which the kernel just stacks. ``cidr.MaskDomain``
+    overrides it for fixed-width addresses (module docstring)."""
+
+    def __init__(self, trunc):
+        self.trunc = trunc
+
+    def __call__(self, key_col, depth):
+        return self.trunc(key_col, depth)
+
+    def route_hash(self, prefix_col, depth):
+        """Hash of a route key, given in this domain's key form at its
+        own depth (as ``exact_lpm`` and ``exact_repair`` also take it)."""
+        return _h64_expr(prefix_col, depth)
+
+    def key_hash(self, key_col, depth):
+        """Hash of ``key_col`` truncated to ``depth``."""
+        return _h64_expr(self(key_col, depth), depth)
+
+    def probe(self, key_col, depths):
+        """(int64 columns the probe ships per row, function turning an
+        (n, c) uint64 matrix of them into the (n, D) key-hash matrix)."""
+        return [self.key_hash(key_col, d) for d in depths], _stacked
+
+
+def _domain(trunc) -> KeyDomain:
+    return trunc if isinstance(trunc, KeyDomain) else KeyDomain(trunc or _trunc)
 
 
 def derive_prefix_table(corpus: DataFrame, path_col: str = "path", max_depth: int = 3, every: int = 2) -> DataFrame:
@@ -275,20 +328,27 @@ class PathLPM:
     ) -> "PathLPM":
         """Two-pass distributed guided build (see module docstring).
 
-        The filter is deliberately sparse (``bits_per_route`` bits/route
-        by default) — the reference's own finding: hash-0 markers and
-        pointer slots are only trustworthy in a sparse filter
-        (/root/reference/doc/tex/report.tex:548-569, 'keep it sparse').
+        The filter is sized at ``bits_per_route`` bits/route (40 by
+        default) because hash-0 markers and pointer slots are only
+        trustworthy in a sparse filter — the reference's own finding
+        (its report, doc/tex/report.tex:548-569, 'keep it sparse').
+        Note: 40 bits/route is NOT sparse on a deep table. Each route
+        also sets hash 0 per right turn of its guide-tree walk plus a
+        pointer pattern per turn, and k = tree height + enc_bits + 4. On
+        ``perfbench``'s 3,000-route IPv4 table (19 depths, k=16) the
+        measured fill is 0.33, so about 70 % of guided lookups
+        fall back to the linear scan and a row costs about 147 bit
+        probes. More bits per route would fix that at the price of a
+        larger engine blob; the default is kept as is.
 
-        ``trunc(key_col, depth)`` defines the prefix domain: given a key
-        column and a depth (int or Column), return the key truncated to
-        that depth. Default is '/'-path component truncation; the CIDR
-        adapter passes numeric mask truncation so IPv4 keys never
-        round-trip through 32-component bit strings. The SAME trunc must
-        be passed to ``lookup``.
+        ``trunc`` picks the prefix domain: a ``KeyDomain`` (the CIDR
+        adapter passes ``cidr.ip4_trunc`` / ``cidr.ip6_trunc``) or a
+        plain ``trunc(key_col, depth)`` callable returning the key
+        truncated to that depth (int or Column). Default is '/'-path
+        component truncation. The SAME trunc must be passed to
+        ``lookup``.
         """
-        trunc = trunc or _trunc
-        spark = prefix_df.sparkSession
+        dom = _domain(trunc)
         # the route table is consumed by ~6 separate actions below (stats,
         # BMP join, walk join, inserts, FIB collect); its lineage typically
         # contains a distinct() over the full corpus — cache it or every
@@ -312,7 +372,7 @@ class PathLPM:
             prefix_df.withColumnRenamed("prefix", "p")
             .withColumn("__d", F.explode(F.array(*[F.lit(d) for d in depths])))
             .where(F.col("__d") < F.col("depth"))
-            .select("p", "depth", "__d", trunc(F.col("p"), F.col("__d")).alias("__prefix"))
+            .select("p", "depth", "__d", dom(F.col("p"), F.col("__d")).alias("__prefix"))
         )
         bmp_join = cand.join(
             F.broadcast(prefix_df.select(F.col("prefix").alias("__prefix"), F.col("depth").alias("__d"))),
@@ -372,22 +432,21 @@ class PathLPM:
                 (pattern if hasattr(pattern, "cast") else F.lit(pattern)).cast("long").alias("pattern"),
             )
 
+        # each Column op is a py4j round trip, and at small table sizes
+        # building this expression takes longer than running
+        # it: build every distinct hash expression once and share it
+        # across the depth branches. The full-route hash takes the
+        # branch's literal depth (same value: the branch holds depth == d)
+        p, bmp_ix, empty = F.col("p"), F.col("bmp_ix"), F.array().cast(
+            "array<struct<h64:bigint,kind:int,count_hit:int,pattern:bigint>>"
+        )
+        key_at = {v: dom.key_hash(p, v) for v in {v for _d, v, _c in walk_rows}}
+
         def _for_depth(d: int):
-            full = [_ins(_h64_expr(F.col("p"), F.col("depth")), 0, 0, 0)]
-            markers = [
-                _ins(_h64_expr(trunc(F.col("p"), v), F.lit(v)), 1, 0, 0) for v, _c in walk_plan[d]
-            ]
-            pats = F.when(
-                F.col("bmp_ix") > 0,
-                F.array(
-                    *[
-                        _ins(_h64_expr(trunc(F.col("p"), v), F.lit(v)), 2, c, F.col("bmp_ix"))
-                        for v, c in walk_plan[d]
-                    ]
-                )
-                if walk_plan[d]
-                else F.array().cast("array<struct<h64:bigint,kind:int,count_hit:int,pattern:bigint>>"),
-            ).otherwise(F.array().cast("array<struct<h64:bigint,kind:int,count_hit:int,pattern:bigint>>"))
+            full = [_ins(dom.route_hash(p, d), 0, 0, 0)]
+            markers = [_ins(key_at[v], 1, 0, 0) for v, _c in walk_plan[d]]
+            pat_rows = [_ins(key_at[v], 2, c, bmp_ix) for v, c in walk_plan[d]]
+            pats = F.when(bmp_ix > 0, F.array(*pat_rows) if pat_rows else empty).otherwise(empty)
             return F.concat(F.array(*full, *markers), pats)
 
         structs = depths and F.when(F.col("depth") == depths[0], _for_depth(depths[0]))
@@ -466,7 +525,7 @@ class PathLPM:
         )
         if fib_h64 is None:
             fib_h64 = prefix_df.select(
-                _h64_expr(F.col("prefix"), F.col("depth")).alias("h")
+                dom.route_hash(F.col("prefix"), F.col("depth")).alias("h")
             ).toPandas()["h"].to_numpy()
         fib = np.sort(fib_h64.astype(np.int64, copy=False).view(np.uint64))
         if weighting == "by_share":
@@ -511,9 +570,12 @@ class PathLPM:
 
         Python stage is ``mapInArrow``, not ``mapInPandas``: passthrough
         columns are re-emitted as the SAME Arrow arrays (zero copy — a
-        wide corpus row never materializes as pandas objects) and the D
-        key-hash columns are int64 Arrow buffers viewed as an (n, D)
-        uint64 matrix with no copy and no Python-side hashing.
+        wide corpus row never materializes as pandas objects). The key
+        columns the domain ships (``KeyDomain.probe``: D JVM hashes for
+        '/'-paths, the raw address words for CIDR) are int64 Arrow
+        buffers viewed as one uint64 matrix with no copy; the domain's
+        batch function turns each kernel chunk of it into the (n, D)
+        key-hash matrix.
 
         ``trunc`` must match the one the engine was built with (see
         ``build``). ``exact_repair``: pass the route table (prefix,
@@ -521,22 +583,19 @@ class PathLPM:
         verified with a broadcast anti-join and the (expected-empty)
         mismatch set is re-resolved exactly; see module docstring."""
         assert mode in ("guided", "linear")
-        trunc = trunc or _trunc
+        dom = _domain(trunc)
         spark = df.sparkSession
         payload = self.to_bytes()
         bc = spark.sparkContext.broadcast(payload)
-        depths = self.depths
 
-        # D flat LongType columns, NOT array<bigint>: a nested list column
+        # flat LongType columns, NOT array<bigint>: a nested list column
         # materializes per-row list cells plus a worker-side unpack —
-        # flat int64 buffers arrive kernel-ready (the same finding that
-        # made the digest era use one concatenated binary, now with zero
-        # decode work at all; the numpy kernel runs ~1M rows/s/core)
-        hcols = [f"__h{j}" for j in range(len(depths))]
-        src = df
-        for j, d in enumerate(depths):
-            src = src.withColumn(hcols[j], _h64_expr(trunc(F.col(path_col), d), F.lit(d)))
-        keep = [f for f in src.schema.fields if f.name not in hcols]
+        # flat int64 buffers arrive kernel-ready (the numpy kernel runs
+        # ~1M rows/s/core)
+        key_exprs, to_hashes = dom.probe(F.col(path_col), self.depths)
+        kcols = [f"__k{j}" for j in range(len(key_exprs))]
+        src = df.withColumns(dict(zip(kcols, key_exprs)))
+        keep = [f for f in src.schema.fields if f.name not in kcols]
         names = [f.name for f in keep]
         out_schema = StructType(
             keep
@@ -562,9 +621,8 @@ class PathLPM:
                     bits, fibp = ans, ans
                     fell = np.zeros(0, dtype=bool)
                 else:
-                    H = np.column_stack(
-                        [_arrow_int64(b.column(b.schema.get_field_index(hc))) for hc in hcols]
-                    )
+                    karrs = [b.column(b.schema.get_field_index(hc)) for hc in kcols]
+                    K = np.column_stack([_arrow_int64(a) for a in karrs])
                     # kernel sub-chunks: one Arrow batch can be 64k+ rows
                     # (transfer-efficient), but the kernel's temporaries
                     # (hash/slot/hit matrices) scale with rows x depths —
@@ -576,9 +634,15 @@ class PathLPM:
                     # chunking cannot change them.
                     kern = eng._lookup_batch_guided if mode_guided else eng._lookup_batch_linear
                     parts = [
-                        kern(H[s : s + _KERNEL_CHUNK]) for s in range(0, nb, _KERNEL_CHUNK)
+                        kern(to_hashes(K[s : s + _KERNEL_CHUNK]))
+                        for s in range(0, nb, _KERNEL_CHUNK)
                     ]
                     ans, bits, fibp, fell = (np.concatenate(x) for x in zip(*parts))
+                    # a null key column (null address, or one the domain
+                    # cannot parse) is a miss, as in ``exact_lpm``
+                    for a in karrs:
+                        if a.null_count:
+                            ans[a.is_null().to_numpy(zero_copy_only=False)] = 0
                 yield pa.RecordBatch.from_arrays(
                     passthrough
                     + [
@@ -593,7 +657,7 @@ class PathLPM:
         out = src.mapInArrow(run, schema=out_schema)
         out = out.withColumn(
             "lpm_prefix",
-            F.when(F.col("lpm_depth") > 0, trunc(F.col(path_col), F.col("lpm_depth"))).otherwise(F.lit(None)),
+            F.when(F.col("lpm_depth") > 0, dom(F.col(path_col), F.col("lpm_depth"))).otherwise(F.lit(None)),
         )
         if exact_repair is not None:
             out = self._repair_collisions(out, exact_repair, path_col, trunc)
@@ -849,8 +913,8 @@ class PathLPM:
             if blob[:5] == b"IFLPM":
                 raise ValueError(
                     f"incompatible PathLPM blob version {blob[:6]!r}: this build "
-                    f"reads {_MAGIC.decode()} (uint64 xxhash64 keys); rebuild the "
-                    "engine from its route table"
+                    f"reads {_MAGIC.decode()} (xxhash64 keys, CIDR keys over masked "
+                    "int64 words); rebuild the engine from its route table"
                 )
             raise ValueError("not a PathLPM blob")
         off = len(_MAGIC)

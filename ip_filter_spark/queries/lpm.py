@@ -145,9 +145,7 @@ def lpm_cidr_events(spark, sf_dir):
     uu = ev.select((F.col("user_id") % 997).alias("u1"), (F.col("user_id") % 3).alias("u3")).distinct()
     base = (F.col("u1") * F.lit(_KNUTH)) % F.lit(4294967296)
     plen = (F.lit(8) + F.col("u3") * F.lit(8)).cast("int")
-    p2 = F.pow(F.lit(2.0), (F.lit(32) - plen).cast("double")).cast("long")
-    masked = (base - (base % p2)).cast("long")
-    routes = uu.select(masked.cast("string").alias("prefix"), plen.alias("depth")).distinct()
+    routes = uu.select(ip4_trunc(base, plen).alias("prefix"), plen.alias("depth")).distinct()
     eng = PathLPM.build(routes, num_partitions=8, trunc=ip4_trunc)
     # spread the probe side: the events parquet is a single row group, so
     # without the repartition the address synthesis + probe kernel run on

@@ -27,6 +27,10 @@ Kernels:
   (law per /root/reference/prototype/bloomfilter.py:79-86 and
   /root/reference/src/bloom/bloom.c:41-47; our split/odd-forcing details
   are our own).
+
+- ``spark_xxhash64``: Spark's ``xxhash64`` over int/long arguments, so a
+  kernel computes the same 64-bit key a JVM expression would (the CIDR
+  LPM probe, operators/cidr.py).
 """
 
 from __future__ import annotations
@@ -122,6 +126,42 @@ def rehash(h64: np.ndarray, salt: int) -> np.ndarray:
         z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
         z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
     return z ^ (z >> np.uint64(31))
+
+
+_XXH_P1 = np.uint64(0x9E3779B185EBCA87)
+_XXH_P2 = np.uint64(0xC2B2AE3D27D4EB4F)
+_XXH_P3 = np.uint64(0x165667B19E3779F9)
+_XXH_P4 = np.uint64(0x85EBCA77C2B2AE63)
+_XXH_P5 = np.uint64(0x27D4EB2F165667C5)
+SPARK_XXH_SEED = 42  # Spark's ``xxhash64`` seed
+
+
+def _rotl(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _xxh_fmix(h: np.ndarray) -> np.ndarray:
+    h = (h ^ (h >> np.uint64(33))) * _XXH_P2
+    h = (h ^ (h >> np.uint64(29))) * _XXH_P3
+    return h ^ (h >> np.uint64(32))
+
+
+def spark_xxhash64(ints, longs=()) -> np.ndarray:
+    """Bit-exact numpy copy of Spark's ``xxhash64(int i, long w0, long
+    w1, ...)`` (``XXH64.hashInt`` on ``i``, then ``XXH64.hashLong`` per
+    word, each chaining the previous hash as its seed). All arguments
+    broadcast; returns uint64 (view as int64 for Spark's signed long)."""
+    with np.errstate(over="ignore"):
+        i32 = np.asarray(ints).astype(np.int64).astype(np.uint64) & _LOW32
+        h = np.uint64(SPARK_XXH_SEED) + _XXH_P5 + np.uint64(4)
+        h = _rotl(h ^ (i32 * _XXH_P1), 23) * _XXH_P2 + _XXH_P3
+        h = _xxh_fmix(h)
+        for w in longs:
+            w = np.asarray(w).astype(np.uint64, copy=False)
+            h = h + _XXH_P5 + np.uint64(8)
+            h = h ^ (_rotl(w * _XXH_P2, 31) * _XXH_P1)
+            h = _xxh_fmix(_rotl(h, 27) * _XXH_P1 + _XXH_P4)
+    return h
 
 
 def sha256_bytes(data: bytes) -> bytes:

@@ -212,10 +212,152 @@ def test_ip4_exact_repair_and_blob_version(spark):
     fixed = lookup_ip4(eng, traffic, mode="linear", exact_repair=routes).first()
     assert fixed.lpm_depth == 8 and fixed.lpm_prefix_ip == (10 << 24)
 
-    # stale v1 blob fails loudly, not as a corrupt read
-    blob = bytearray(eng.to_bytes())
-    blob[5:6] = b"1"  # IFLPM2 -> IFLPM1
-    with _pytest.raises(ValueError, match="incompatible PathLPM blob version"):
-        PathLPM.from_bytes(bytes(blob))
+    # stale v1/v2 blobs fail loudly, not as a corrupt read — a v2 IP
+    # engine hashed decimal/hex key strings and would otherwise load and
+    # answer "default route" for every address
+    for stale in (b"1", b"2"):
+        blob = bytearray(eng.to_bytes())
+        blob[5:6] = stale  # IFLPM3 -> IFLPM1 / IFLPM2
+        with _pytest.raises(ValueError, match="incompatible PathLPM blob version"):
+            PathLPM.from_bytes(bytes(blob))
     with _pytest.raises(ValueError, match="not a PathLPM blob"):
         PathLPM.from_bytes(b"garbage")
+
+
+V6_EDGE_ROUTES = [
+    ("8" + "0" * 31, 1),                        # 8000::/1 (hi >= 2^63)
+    ("ff" + "0" * 30, 8),                       # ff00::/8
+    ("20010db8" + "0" * 24, 32),
+    ("20010db88" + "0" * 23, 33),               # partial nibble: bit 33 set
+    ("20010db8000000a0" + "0" * 16, 64),        # whole hi word
+    ("20010db8000000a08" + "0" * 15, 65),       # first bit of the lo word
+    ("20010db8000000a08000000000000001", 128),
+]
+V6_EDGE_ADDRS = {
+    "ffab" + "1" * 28: 8,
+    "81" + "0" * 29 + "f": 1,
+    "7f" + "f" * 30: 0,
+    "20010db87" + "0" * 23: 32,                 # nibble 0111: outside /33
+    "20010db89" + "0" * 22 + "3": 33,           # nibble 1001: inside /33
+    "20010db8000000a0" + "0" * 15 + "5": 64,
+    "20010db8000000a08" + "0" * 14 + "2": 65,
+    "20010db8000000a08000000000000001": 128,
+    "20010DB8000000A08000000000000001": 128,    # upper-case input
+    "FFAB" + "E" * 28: 8,
+}
+
+
+def test_ip6_edge_prefixes_agree_across_domains(spark):
+    """v6 edges of the integer-mask domain: hi words >= 2^63, the /64,
+    /65 and /128 word boundaries, a partial-nibble /33 and upper-case
+    hex input. lookup_ip6 (both modes) must equal exact_lpm in the v6
+    key domain and the bit-path engine on the same routes."""
+    from ip_filter_spark.operators.cidr import (
+        _bits_to_path,
+        build_ip6_lpm,
+        ip6_bits,
+        ip6_route_table,
+        ip6_to_bitpath,
+        ip6_trunc,
+        lookup_ip6,
+    )
+    from ip_filter_spark.operators.lpm import PathLPM, exact_lpm
+
+    raw = spark.createDataFrame(V6_EDGE_ROUTES, "h string, depth int")
+    q = spark.createDataFrame([(a,) for a in V6_EDGE_ADDRS], "h string")
+    eng = build_ip6_lpm(raw, num_partitions=2)
+    got = {
+        m: {r.h: (r.lpm_depth, r.lpm_prefix_hex) for r in lookup_ip6(eng, q, mode=m).collect()}
+        for m in ("guided", "linear")
+    }
+    ex_out = exact_lpm(q, ip6_route_table(raw), path_col="h", trunc=ip6_trunc)
+    ex = {r.h: (r.lpm_depth, r.lpm_prefix) for r in ex_out.collect()}
+    bp_routes = raw.select(_bits_to_path(ip6_bits(F.col("h")), F.col("depth")).alias("prefix"), "depth")
+    bp_eng = PathLPM.build(bp_routes, num_partitions=2)
+    bp_out = bp_eng.lookup(q.withColumn("path", ip6_to_bitpath(F.col("h"))))
+    bp = {r.h: r.lpm_depth for r in bp_out.collect()}
+
+    assert got["guided"] == got["linear"] == ex
+    assert {a: d for a, (d, _) in ex.items()} == bp == V6_EDGE_ADDRS
+    # the matched prefix is the masked address, rendered lower-case
+    assert ex["20010DB8000000A08000000000000001"][1] == "20010db8000000a08000000000000001"
+    assert ex["FFAB" + "E" * 28][1] == "ff" + "0" * 30
+    assert ex["20010db89" + "0" * 22 + "3"][1] == "20010db88" + "0" * 23
+    assert ex["7f" + "f" * 30] == (0, None)
+
+
+def test_ip6_exact_repair_forged_collision(spark):
+    """exact_repair in the v6 key domain (mirrors the v4 test): a forged
+    FIB collision on a non-route /48 truncation is reported by the
+    kernel and undone by lookup_ip6(..., exact_repair=routes)."""
+    import numpy as np
+
+    from ip_filter_spark.operators.cidr import build_ip6_lpm, ip6_route_table, ip6_trunc, lookup_ip6
+
+    raw = spark.createDataFrame(
+        [("20010db8" + "0" * 24, 32), ("20010db80001" + "0" * 20, 48)], "h string, depth int"
+    )
+    routes = ip6_route_table(raw)
+    eng = build_ip6_lpm(raw, num_partitions=2)
+    addr = "20010db8ffff" + "0" * 19 + "9"  # inside the /32 only
+    traffic = spark.createDataFrame([(addr,)], "h string")
+    assert lookup_ip6(eng, traffic, mode="linear").first().lpm_depth == 32
+
+    h = traffic.select(ip6_trunc.key_hash(F.col("h"), 48).alias("h")).first().h
+    hu = np.array([h], dtype=np.int64).view(np.uint64)
+    eng.fib = np.sort(np.concatenate([eng.fib, hu]))
+    eng.bf.insert_hashes(hu)
+    wrong = lookup_ip6(eng, traffic, mode="linear").first()
+    assert wrong.lpm_depth == 48 and wrong.lpm_prefix_hex == "20010db8ffff" + "0" * 20  # phantom /48
+    for mode in ("linear", "guided"):
+        fixed = lookup_ip6(eng, traffic, mode=mode, exact_repair=routes).first()
+        assert fixed.lpm_depth == 32 and fixed.lpm_prefix_hex == "20010db8" + "0" * 24
+
+
+@pytest.mark.parametrize("mode", ["guided", "linear"])
+def test_ip_null_and_unparsable_addresses_are_misses(spark, mode):
+    """An address whose key words come out null is a miss, and every
+    other row of its Arrow batch keeps its answer: v4 null addresses and
+    (non-ANSI) strings that are not numbers; v6 null addresses and
+    strings too short to hold the low word. Each side runs in one
+    partition, so bad and good rows share a batch; both must equal
+    exact_lpm in the same key domain."""
+    from ip_filter_spark.operators.cidr import (
+        build_ip6_lpm,
+        cidr4_route_table,
+        ip4_trunc,
+        ip6_route_table,
+        ip6_trunc,
+        lookup_ip6,
+    )
+    from ip_filter_spark.operators.lpm import exact_lpm
+
+    def answers(df, key):
+        return sorted((r.i, r.lpm_depth, r[key]) for r in df.collect())
+
+    cidrs = spark.createDataFrame(CIDRS, "cidr string")
+    eng4 = build_ip4_lpm(cidrs, num_partitions=2)
+    good4 = dict(zip(map(str, TRAFFIC), [0, 2, 24, 22, 0]))
+    bad4 = [None, "not-an-ip", None, ""]
+    addrs4 = [a for pair in zip(good4, bad4 + [None]) for a in pair]
+    q4 = spark.createDataFrame(list(enumerate(addrs4)), "i int, ip string").coalesce(1)
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")  # a bad v4 string casts to null
+    try:
+        got4 = answers(lookup_ip4(eng4, q4, mode=mode), "lpm_prefix_ip")
+        ex4 = answers(exact_lpm(q4, cidr4_route_table(cidrs), path_col="ip", trunc=ip4_trunc), "lpm_prefix")
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert got4 == ex4
+    assert [d for _i, d, _p in got4] == [good4.get(a, 0) for a in addrs4]
+    assert all(p is None for i, _d, p in got4 if addrs4[i] not in good4)
+
+    raw6 = spark.createDataFrame(V6_EDGE_ROUTES, "h string, depth int")
+    eng6 = build_ip6_lpm(raw6, num_partitions=2)
+    bad6 = [None, "2001:db8::1", "20010db8", "ffab", None]
+    addrs6 = [a for pair in zip(V6_EDGE_ADDRS, bad6 * 2) for a in pair]
+    q6 = spark.createDataFrame(list(enumerate(addrs6)), "i int, h string").coalesce(1)
+    got6 = answers(lookup_ip6(eng6, q6, mode=mode), "lpm_prefix_hex")
+    ex6 = answers(exact_lpm(q6, ip6_route_table(raw6), path_col="h", trunc=ip6_trunc), "lpm_prefix")
+    assert got6 == ex6
+    assert [d for _i, d, _p in got6] == [V6_EDGE_ADDRS.get(a, 0) for a in addrs6]

@@ -116,20 +116,39 @@ def test_mg_verdict_is_distributed(spark, sf_dir):
 
 
 def test_cidr_probe_plan_shuffle_free(spark):
-    """The CIDR probe must ride the traffic's partitioning: digest
-    expressions + broadcast filter blob + mapInPandas, no Exchange in
-    the probe subplan (the 100 TB shape — probes scale with the scan)."""
+    """The CIDR probes (v4 and v6) must ride the traffic's partitioning:
+    word expressions + broadcast filter blob + mapInArrow, no Exchange
+    in the probe subplan (the 100 TB shape — probes scale with the
+    scan). The Arrow input carries the raw address words only — no
+    per-depth ``__h*`` hash columns — so its width does not grow with
+    the number of route depths."""
+    import re
+
     from pyspark.sql import functions as F
 
-    from ip_filter_spark.operators.cidr import build_ip4_lpm, lookup_ip4
+    from ip_filter_spark.operators.cidr import build_ip4_lpm, build_ip6_lpm, lookup_ip4, lookup_ip6
 
-    cidrs = spark.createDataFrame([("10.0.0.0/8",), ("10.1.0.0/16",)], "cidr string")
-    eng = build_ip4_lpm(cidrs, num_partitions=2)
+    def arrow_inputs(out):
+        plan = spark._jvm.PythonSQLUtils.explainString(out._jdf.queryExecution(), "formatted")
+        assert "Exchange" not in plan, plan
+        m = re.search(r"\(\d+\) MapInArrow\s*\nInput \[\d+\]: \[([^\]]*)\]", plan)
+        assert m, plan
+        cols = [c.split("#")[0] for c in m.group(1).split(", ")]
+        assert not any(c.startswith("__h") for c in cols), plan
+        return cols
+
+    few = spark.createDataFrame([("10.0.0.0/8",), ("10.1.0.0/16",)], "cidr string")
+    many = spark.createDataFrame([(f"10.{i}.0.0/{8 + i}",) for i in range(12)], "cidr string")
     traffic = spark.range(1000).select((F.col("id") * 2654435761 % 4294967296).alias("ip"))
-    out = lookup_ip4(eng, traffic, mode="guided")
-    plan = spark._jvm.PythonSQLUtils.explainString(out._jdf.queryExecution(), "formatted")
-    assert "Exchange" not in plan, plan
-    assert "ArrowEvalPython" in plan or "MapInPandas" in plan or "MapInArrow" in plan, plan
+    for cidrs in (few, many):
+        assert arrow_inputs(lookup_ip4(build_ip4_lpm(cidrs, num_partitions=2), traffic)) == ["ip", "__k0"]
+
+    v6 = spark.createDataFrame(
+        [("20010db8" + "0" * 24, 32), ("20010db80001" + "0" * 20, 48), ("2" + "0" * 31, 4)],
+        "h string, depth int",
+    )
+    t6 = spark.range(1000).select(F.lpad(F.hex(F.col("id") * 2654435761), 32, "0").alias("h"))
+    assert arrow_inputs(lookup_ip6(build_ip6_lpm(v6, num_partitions=2), t6)) == ["h", "__k0", "__k1"]
 
 
 def test_minhash_verify_joins_broadcast_pairs(spark, sf_dir):
